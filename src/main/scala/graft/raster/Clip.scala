@@ -149,12 +149,11 @@ object Clip {
         col("n_valid"))
   }
 
-  /** The reference's overlap error, as an action-time check (the reference
-    * raises eagerly per scene; our plan-level equivalent validates the
-    * clip result before the sink). */
-  def requireOverlap(clipped: DataFrame, inputNonEmpty: Boolean): DataFrame = {
-    if (inputNonEmpty && clipped.isEmpty)
+  /** The reference's overlap error, as an action-time check on the clip
+    * result's row count (the reference raises eagerly per scene; our
+    * plan-level equivalent validates the materialized clip before the
+    * sink). */
+  def requireOverlap(clippedRows: Long, inputNonEmpty: Boolean): Unit =
+    if (inputNonEmpty && clippedRows == 0)
       throw new IllegalArgumentException("Input shapes do not overlap raster")
-    clipped
-  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.RasterModel
 import graft.raster.NdviKernel
@@ -10,14 +11,53 @@ import graft.raster.NdviKernel
 class NdviExprSpec extends SparkSpec {
   import spark.implicits._
 
-  private def pixelsOf(df: org.apache.spark.sql.DataFrame): Seq[Option[Float]] =
+  /** N2–N8 for one pixel pair as float32 Column arithmetic (NULL = masked):
+    * the reference implementation the native kernel is checked against. */
+  private def ndviPixel(red: Column, nir: Column,
+                        redNodata: Column, nirNodata: Column): Column = {
+    import NdviKernel.{Eps, Offset, Scale}
+    // N3: mask on raw DNs (fill value 0 + declared nodata), before scaling.
+    val masked = red.isNull || nir.isNull ||
+      red === 0f || nir === 0f ||
+      (redNodata.isNotNull && red === redNodata.cast("float")) ||
+      (nirNodata.isNotNull && nir === nirNodata.cast("float"))
+    // N4: scale in float32.
+    val r = red * lit(Scale) + lit(Offset)
+    val n = nir * lit(Scale) + lit(Offset)
+    // N5: non-finite after scaling.
+    val nonFinite = isnan(r) || isnan(n) ||
+      r === Float.PositiveInfinity || r === Float.NegativeInfinity ||
+      n === Float.PositiveInfinity || n === Float.NegativeInfinity
+    // N6: epsilon-safe ratio. Spark's Divide always widens to double; the
+    // cast back to float is the closest available float32 semantics (the
+    // operands are exact float32 values, so only the final rounding step
+    // can differ from NumPy's native float32 divide, by at most one ulp
+    // in double-rounding corner cases).
+    val ratio = ((n - r) / (n + r + lit(Eps))).cast("float")
+    // N8 on real values; masked stays NULL (N7 at sink only).
+    when(masked || nonFinite, lit(null).cast("float"))
+      .otherwise(least(greatest(ratio, lit(-1f)), lit(1f)))
+  }
+
+  /** The HOF reference chain: [[NdviKernel.computeNdvi]]'s output shape
+    * with the kernel as an interpreted zip_with lambda over [[ndviPixel]]. */
+  private def hofNdvi(tiles: DataFrame): DataFrame =
+    NdviKernel.pairBands(tiles).select(
+      col("scene_id"), lit("ndvi").as("band"),
+      col("tile_col"), col("tile_row"),
+      col("width"), col("height"), col("epsg"), col("transform"),
+      lit(NdviKernel.NodataOut.toDouble).as("nodata"),
+      zip_with(col("red_px"), col("nir_px"),
+        (r, n) => ndviPixel(r, n, col("red_nodata"), col("nir_nodata"))).as("pixels"))
+
+  private def pixelsOf(df: DataFrame): Seq[Option[Float]] =
     df.orderBy("scene_id").collect().toSeq.flatMap(
       _.getSeq[Any](9).map(v => Option(v).map(_.asInstanceOf[Float])))
 
   test("expr path equals HOF path on the golden fixture") {
     val tiles = RasterModel.dummyConstant(spark)
-    val a = pixelsOf(NdviKernel.computeNdvi(tiles, useExpr = true))
-    val b = pixelsOf(NdviKernel.computeNdvi(tiles, useExpr = false))
+    val a = pixelsOf(NdviKernel.computeNdvi(tiles))
+    val b = pixelsOf(hofNdvi(tiles))
     assert(a == b)
     // float32-exact golden value, computed in Scala float arithmetic
     // (identical to NumPy float32: -0.18965584f)
@@ -40,8 +80,8 @@ class NdviExprSpec extends SparkSpec {
         case _ => Some(rng.nextInt(65536).toFloat)
       }))
     val tiles = Seq(mk("A", "red"), mk("A", "nir"), mk("B", "red"), mk("B", "nir")).toDF()
-    val a = pixelsOf(NdviKernel.computeNdvi(tiles, useExpr = true))
-    val b = pixelsOf(NdviKernel.computeNdvi(tiles, useExpr = false))
+    val a = pixelsOf(NdviKernel.computeNdvi(tiles))
+    val b = pixelsOf(hofNdvi(tiles))
     assert(a.length == 512)
     // element-wise compare; double-divide-then-cast vs native float32 divide
     // may differ by one ulp in rare double-rounding cases — assert bitwise

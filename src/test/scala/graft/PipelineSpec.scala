@@ -21,6 +21,77 @@ class PipelineSpec extends SparkSpec {
     assert(math.abs(m.getDouble(1) - -0.18965582) < 1e-6)
   }
 
+  private val runSettings = graft.config.Settings.fromString(
+    """dates:
+      |  start: "2022-06-01"
+      |  end:   "2022-12-31"
+      |download:
+      |  max_cloud_cover: 10
+      |  max_items: 10
+      |products:
+      |  reproject_crs: "EPSG:3857"
+      |  build_overviews: true""".stripMargin)
+
+  private def runOn(tiles: org.apache.spark.sql.DataFrame,
+                    aoi: org.apache.spark.sql.DataFrame): NdviPipeline.Result = {
+    val catalog = Seq(("TEST_SCENE", 5.0, "2022-06-10 00:00:00"))
+      .toDF("scene_id", "cloud_cover", "dt")
+      .withColumn("datetime", col("dt").cast("timestamp"))
+    NdviPipeline.run(spark, runSettings, catalog, tiles, aoi,
+      Seq.empty[(String, java.sql.Date)].toDF("scene_id", "acquisition_date"),
+      Seq.empty[(String, Long, Double)].toDF("scene_id", "aoi_id", "mean_ndvi"))
+  }
+
+  private def freshRoot(): String =
+    java.nio.file.Files.createTempDirectory("graft_pipe").toString
+
+  test("run + commitRunTxn decode each input tile row once") {
+    // the tiles frame counts every row it produces: each of run's actions
+    // and each product commit would re-produce all of them if the lineage
+    // were evaluated from the source per action
+    val acc = spark.sparkContext.longAccumulator("tile rows produced")
+    val source = RasterModel.dummyConstant(spark)
+    val tiles = source.as[RasterModel.BandTile].map { t => acc.add(1); t }.toDF()
+    val r = runOn(tiles, RasterModel.aoiOverlap(spark))
+    NdviPipeline.commitRunTxn(spark, r, freshRoot())
+    assert(r.summary == NdviPipeline.RunSummary(1, 1, 0))
+    assert(acc.value == source.count(),
+      s"${acc.value} tile rows produced for ${source.count()} input rows")
+  }
+
+  test("commitRunTxn, commitRun and a failing commit release the run's materialized leaves") {
+    def leakedBy(body: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      body
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    val tiles = RasterModel.dummyConstant(spark)
+    val aoi = RasterModel.aoiOverlap(spark)
+    assert(leakedBy(NdviPipeline.commitRunTxn(spark, runOn(tiles, aoi), freshRoot())).isEmpty)
+    assert(leakedBy(NdviPipeline.commitRun(spark, runOn(tiles, aoi), freshRoot())).isEmpty)
+    // stage 3 fails after ndvi_full and ndvi_clipped committed
+    val leaked = leakedBy {
+      val r = runOn(tiles, aoi)
+      val failingViz = r.viz.withColumn("epsg",
+        when(col("epsg") > 0, raise_error(lit("viz write failed"))).otherwise(col("epsg")))
+      val e = intercept[Exception] {
+        NdviPipeline.commitRun(spark, r.copy(viz = failingViz), freshRoot())
+      }
+      assert(e.getMessage.contains("viz write failed"), e.getMessage)
+    }
+    assert(leaked.isEmpty, s"persisted RDD(s) left behind: ids $leaked")
+  }
+
+  test("run raises the overlap error for an AOI disjoint from the scene") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      runOn(RasterModel.dummyConstant(spark), RasterModel.aoiDisjoint(spark))
+    }
+    assert(e.getMessage == "Input shapes do not overlap raster")
+    // the failing run releases what it had materialized
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("filterCatalog applies F1-F4 semantics") {
     val cat = Seq(
       ("LC08_A", 5.0, "2022-06-10 00:00:00"),
